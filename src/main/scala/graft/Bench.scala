@@ -180,9 +180,13 @@ object Bench {
                 false
               }
             spark.catalog.clearCache()
-            if (ok) (System.nanoTime() - t0) / 1e9 else -1.0
+            if (ok) Some((System.nanoTime() - t0) / 1e9) else None
           }
-          name -> (if (times.contains(-1.0)) -1.0 else times.min)
+          // min over the successful reps; -1.0 only when every rep failed
+          val failed = times.count(_.isEmpty)
+          if (failed > 0) System.err.println(
+            s"[bench] $name isolated: $failed of $streamReps reps failed")
+          name -> times.flatten.minOption.getOrElse(-1.0)
         }.toMap
     val streamJson = streamIsolated.toSeq.sortBy(_._1)
       .map { case (k, v) =>

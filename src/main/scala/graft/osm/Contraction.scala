@@ -67,27 +67,25 @@ object Contraction {
   /** Input: (edge_id LONG, source LONG, target LONG, cost DOUBLE).
     * `forbidden`: vertices exempt from contraction (pgr_contraction's
     * forbidden_vertices). Below `localThreshold` edges the whole
-    * cycle runs on the driver (the GraphCheck broadcast-local pattern:
-    * the distributed fixpoint costs O(cycles × peel rounds × joins)
-    * job launches — pure overhead on a driver-sized graph); the local
-    * walk mirrors the distributed steps operation for operation, so
-    * results are identical (pinned in ContractionSpec). `localThreshold
-    * = 0` forces the distributed loop. */
+    * cycle runs on the driver, behind [[GraphCheck]]'s driver-local
+    * gate; the local walk mirrors the distributed steps operation for
+    * operation, so results are identical (pinned in ContractionSpec).
+    * `localThreshold = 0` forces the distributed loop. */
   def contractGraph(edges: DataFrame, forbidden: Seq[Long] = Nil,
       maxPeelRounds: Int = 64, maxCycles: Int = 8,
-      localThreshold: Long = 100000L): Contracted = {
+      localThreshold: Long = GraphCheck.DefaultLocalThreshold)
+      : Contracted = {
     val spark = edges.sparkSession
     var cur = chk(edges.select(col("edge_id").cast("long"),
       col("source").cast("long"), col("target").cast("long"),
       col("cost").cast("double"),
       array().cast("array<long>").as("contracted")))
-    if (localThreshold > 0 &&
-        cur.limit(math.min(localThreshold + 1, Int.MaxValue.toLong).toInt)
-          .count() <= localThreshold)
+    GraphCheck.collectIfSmall(cur, localThreshold).foreach { rows =>
       return contractLocal(spark,
-        cur.collect().map(r => LocalEdge(r.getLong(0), r.getLong(1),
+        rows.map(r => LocalEdge(r.getLong(0), r.getLong(1),
           r.getLong(2), r.getDouble(3), Vector.empty)),
         forbidden.toSet, maxPeelRounds, maxCycles)
+    }
     var vmap = chk(spark.createDataFrame(
       spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
       new org.apache.spark.sql.types.StructType()

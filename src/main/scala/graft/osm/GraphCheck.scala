@@ -1,7 +1,10 @@
 package graft.osm
 
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.types.LongType
+import org.apache.spark.sql.{Column, DataFrame, Row}
+
+import scala.collection.mutable
 
 /** Graph-construction validation utilities over the exported edge list.
   *
@@ -25,12 +28,34 @@ import org.apache.spark.sql.{Column, DataFrame}
   * neither step changes any label, labels are constant within each
   * component and equal to its min. Each round is two shuffle joins +
   * one aggregate; `localCheckpoint` cuts lineage so plans stay flat.
+  *
+  * Driver-local twins: most fixpoints here also have an in-memory twin
+  * on the driver, chosen per call by [[collectIfSmall]] — the same
+  * adaptive decision a broadcast join makes. A relation that fits on
+  * the driver would pay tens of per-round job launches in the
+  * distributed loop for nothing, so the gate runs ONE action over the
+  * (materialized) input — a `collect()` limited to one row past the
+  * threshold, not a count followed by a collect. At most
+  * `localThreshold` rows ([[DefaultLocalThreshold]] by default) come
+  * back as the whole relation and the twin runs on them; more rows fall
+  * through to the distributed loop. A collected row holding a null also
+  * falls through — dirty keys take the distributed semantics instead of
+  * a driver-side null read. Each twin reproduces its loop's rows (pinned
+  * local == distributed in RoadGraphSpec/PropertySpec); paths that
+  * report a round count report 0 for the twin. `localThreshold = 0`
+  * forces the distributed loop (scale witnesses, plan audits, the pins
+  * themselves). The plain shortest-path twins share one driver
+  * Dijkstra, [[dijkstraLocal]].
   */
 object GraphCheck {
 
+  /** Default `localThreshold` of every driver-local twin: relations of
+    * at most this many rows run on the driver. */
+  final val DefaultLocalThreshold = 100000L
+
   /** (node_id, component) for the undirected graph of the edge list. */
   def connectedComponents(edges: DataFrame, maxIter: Int = 50,
-      localThreshold: Long = 100000L): DataFrame =
+      localThreshold: Long = DefaultLocalThreshold): DataFrame =
     connectedComponentsWithRounds(edges, maxIter, localThreshold)._1
 
   /** Same, also returning the number of rounds to the fixpoint —
@@ -38,25 +63,20 @@ object GraphCheck {
     * on a long chain in RoadGraphSpec, which forces the distributed
     * loop with `localThreshold = 0`). */
   def connectedComponentsWithRounds(edges: DataFrame,
-      maxIter: Int = 50, localThreshold: Long = 100000L): (DataFrame, Int) = {
-    // Broadcast-local fast path — the multiSourceShortestPaths pattern
-    // (GraphCheck:157): a component labelling that fits on the driver
-    // pays O(log diameter) multi-stage shuffle rounds for nothing.
-    // Union-find with path compression produces THE SAME labels by
-    // construction (component = min node id in the component — the
-    // hash-min fixpoint). Rounds reports 0 to mark the local path;
-    // localThreshold = 0 forces the distributed loop (ScaleSmoke's
-    // convergence witness and the composed operators' scale paths).
+      maxIter: Int = 50,
+      localThreshold: Long = DefaultLocalThreshold): (DataFrame, Int) = {
+    // Driver twin: union-find with path compression produces THE SAME
+    // labels by construction (component = min node id in the
+    // component — the hash-min fixpoint).
     if (localThreshold > 0) {
       val eChk = edges
         .select(col("start_node").cast("long"), col("end_node").cast("long"))
         .localCheckpoint(true)
-      if (eChk.limit(math.min(localThreshold + 1, Int.MaxValue.toLong).toInt)
-          .count() <= localThreshold) {
+      collectIfSmall(eChk, localThreshold).foreach { rows =>
         val spark = eChk.sparkSession
         import spark.implicits._
-        val es = eChk.collect().map(r => (r.getLong(0), r.getLong(1)))
-        val parent = scala.collection.mutable.Map.empty[Long, Long]
+        val es = rows.map(r => (r.getLong(0), r.getLong(1)))
+        val parent = mutable.Map.empty[Long, Long]
         def find(x: Long): Long = {
           var r = x
           while (parent(r) != r) r = parent(r)
@@ -70,8 +90,8 @@ object GraphCheck {
           // union by MIN root so the final root IS the component min
           if (ra < rb) parent(rb) = ra else if (rb < ra) parent(ra) = rb
         }
-        val rows = parent.keys.toSeq.sorted.map(n => (n, find(n)))
-        return (rows.toDF("node_id", "component"), 0)
+        val labels = parent.keys.toSeq.sorted.map(n => (n, find(n)))
+        return (labels.toDF("node_id", "component"), 0)
       }
       return connectedComponentsDistributed(eChk, maxIter)
     }
@@ -158,6 +178,83 @@ object GraphCheck {
       .localCheckpoint(true)
   }
 
+  /** The driver-local gate (see the object doc): the whole of `df`,
+    * collected by ONE action, when it has at most `threshold` rows and
+    * no null field, else None — the caller then runs its distributed
+    * loop.
+    * `threshold <= 0` always answers None. `df` should be materialized
+    * (localCheckpoint) so the limited collect is a cheap local scan;
+    * when it comes back with at most `threshold` rows it IS the whole
+    * relation. */
+  private[osm] def collectIfSmall(df: DataFrame,
+      threshold: Long): Option[Array[Row]] = {
+    if (threshold <= 0) return None
+    val rows = df.limit(math.min(threshold + 1, Int.MaxValue.toLong).toInt)
+      .collect()
+    if (rows.length > threshold || rows.exists(_.anyNull)) None
+    else Some(rows)
+  }
+
+  /** Whether every column of `df` is a long — twins that emit their
+    * input ids as longs run only then, so the output schema does not
+    * depend on the path taken. */
+  private def allLong(df: DataFrame): Boolean =
+    df.schema.fields.forall(_.dataType == LongType)
+
+  /** A materialized `(start_node, end_node, w)` relation as
+    * `(start, end, w as double)` triples, through [[collectIfSmall]]. */
+  private def collectWeighted(eChk: DataFrame,
+      threshold: Long): Option[Array[(Long, Long, Double)]] =
+    collectIfSmall(eChk.select(col("start_node"), col("end_node"),
+        col("w").cast("double")), threshold)
+      .map(_.map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))))
+
+  /** Out-adjacency of weighted triples; each node's edges keep their
+    * row order, so relaxation order follows the collected relation. */
+  private def adjacency(
+      es: Array[(Long, Long, Double)]): Map[Long, Array[(Long, Double)]] =
+    es.groupBy(_._1).map { case (u, out) => u -> out.map(e => (e._2, e._3)) }
+
+  /** The driver Dijkstra behind every plain shortest-path twin: all
+    * `sources` start at 0, only distances `<= bound` are kept, and
+    * edges with `skip(u, v)` are never relaxed. On equal-distance ties
+    * the SMALLER predecessor wins — the distributed
+    * `min(struct(dist, pred))` rule; a tie never re-enqueues, so
+    * tracking `pred` cannot change `dist`. Returns `(dist, pred)`;
+    * sources are their own predecessor. */
+  private def dijkstraLocal(adj: Map[Long, Array[(Long, Double)]],
+      sources: Seq[Long], bound: Double = Double.PositiveInfinity,
+      skip: (Long, Long) => Boolean = (_, _) => false)
+      : (mutable.Map[Long, Double], mutable.Map[Long, Long]) = {
+    val dist = mutable.Map.empty[Long, Double]
+    val pred = mutable.Map.empty[Long, Long]
+    val pq = mutable.PriorityQueue
+      .empty[(Double, Long)](Ordering.by[(Double, Long), Double](_._1).reverse)
+    sources.foreach { s => dist(s) = 0.0; pred(s) = s; pq.enqueue((0.0, s)) }
+    while (pq.nonEmpty) {
+      val (d, u) = pq.dequeue()
+      if (d <= dist(u)) {
+        adj.getOrElse(u, Array.empty[(Long, Double)]).foreach { case (v, w) =>
+          val nd = d + w
+          if (nd <= bound && !skip(u, v)) {
+            if (!dist.contains(v) || nd < dist(v)) {
+              dist(v) = nd; pred(v) = u; pq.enqueue((nd, v))
+            } else if (nd == dist(v) && u < pred(v)) pred(v) = u
+          }
+        }
+      }
+    }
+    (dist, pred)
+  }
+
+  /** The `source .. target` node sequence of a predecessor map. */
+  private def walkPath(pred: scala.collection.Map[Long, Long], source: Long,
+      target: Long): List[Long] = {
+    var path = List(target); var cur = target
+    while (cur != source) { cur = pred(cur); path = cur :: path }
+    path
+  }
+
   /** Single-source shortest paths over a weighted DIRECTED edge list —
     * the `pgr_dijkstra` analog the reference's graphs are built to
     * feed (`osm-road-graphs.sql` exports exactly this edge shape into
@@ -197,45 +294,19 @@ object GraphCheck {
     * the frontier only by strictly improving, and non-negative weights
     * make improvements finite). */
   def multiSourceShortestPaths(edges: DataFrame, sources: Seq[Long],
-      maxIter: Int = 100, localThreshold: Long = 100000L): (DataFrame, Int) = {
+      maxIter: Int = 100,
+      localThreshold: Long = DefaultLocalThreshold): (DataFrame, Int) = {
     val spark = edges.sparkSession
     import spark.implicits._
     // one upstream execution total: checkpoint the edge relation FIRST,
-    // then the threshold probe and either path read the materialized
-    // copy instead of re-running the (possibly expensive) upstream DAG
+    // then the gate and either path read the materialized copy instead
+    // of re-running the (possibly expensive) upstream DAG
     val eChk = materializeEdges(edges)
-    // Broadcast-local fast path — the same adaptive decision a
-    // broadcast join makes: a graph that fits on the driver pays tens
-    // of per-round job launches in the distributed loop for nothing.
-    // Collect it, run Dijkstra, parallelize the result. Distances are
-    // identical (path sums accumulate in the same order); rounds
-    // reports 0 to mark the local path. Set localThreshold = 0 to
-    // force the distributed loop.
-    if (localThreshold > 0 &&
-        eChk.limit(math.min(localThreshold + 1, Int.MaxValue.toLong).toInt)
-          .count() <= localThreshold) {
-      val isLong = eChk.schema("w").dataType ==
-        org.apache.spark.sql.types.LongType
-      val es = eChk.select(col("start_node"), col("end_node"),
-          col("w").cast("double")).collect()
-        .map(r => (r.getLong(0), (r.getLong(1), r.getDouble(2))))
-        .groupBy(_._1).map { case (k, v) => k -> v.map(_._2) }
-      val dist = scala.collection.mutable.Map[Long, Double]()
-      val pq = scala.collection.mutable.PriorityQueue
-        .empty[(Double, Long)](Ordering.by[(Double, Long), Double](_._1).reverse)
-      sources.foreach { s => dist(s) = 0.0; pq.enqueue((0.0, s)) }
-      while (pq.nonEmpty) {
-        val (d, u) = pq.dequeue()
-        if (d <= dist(u)) {
-          es.getOrElse(u, Array.empty[(Long, Double)]).foreach { case (v, w) =>
-            val nd = d + w
-            if (!dist.contains(v) || nd < dist(v)) {
-              dist(v) = nd; pq.enqueue((nd, v))
-            }
-          }
-        }
-      }
-      val rows = dist.toSeq.sortBy(_._1)
+    // driver twin: distances are identical (path sums accumulate in the
+    // same order)
+    collectWeighted(eChk, localThreshold).map(adjacency).foreach { adj =>
+      val isLong = eChk.schema("w").dataType == LongType
+      val rows = dijkstraLocal(adj, sources)._1.toSeq.sortBy(_._1)
       val out =
         if (isLong) rows.map { case (n, d) => (n, d.toLong) }
           .toDF("node_id", "dist")
@@ -574,7 +645,7 @@ object GraphCheck {
     * fixed budget, not data-dependent. Isolated nodes (only
     * self-loops) drop with the self-loops. */
   def labelPropagation(edges: DataFrame, rounds: Int,
-      localThreshold: Long = 100000L): DataFrame = {
+      localThreshold: Long = DefaultLocalThreshold): DataFrame = {
     val sym = edges
       .select(col("start_node").as("a"), col("end_node").as("b"))
       .unionByName(
@@ -582,14 +653,9 @@ object GraphCheck {
       .filter(col("a") =!= col("b"))
       .distinct()
       .localCheckpoint(true)
-    // Broadcast-local fast path (the connectedComponents localThreshold
-    // pattern): a fixture-sized graph pays `rounds` x (join + 2 hash-agg
-    // + checkpoint) driver jobs for microseconds of counting. The local
-    // sweep reproduces the synchronous (max count, min label) argmax
-    // exactly — counts are exact longs in both forms; pinned
-    // local == distributed in RoadGraphSpec. localThreshold = 0 forces
-    // the distributed loop (scale witnesses, plan audits).
-    collectIfSmallLongs(sym, localThreshold).foreach { rows =>
+    // driver twin: the synchronous (max count, min label) argmax —
+    // counts are exact longs in both forms
+    if (allLong(sym)) collectIfSmall(sym, localThreshold).foreach { rows =>
       val spark = sym.sparkSession
       import spark.implicits._
       return lpaLocal(rows.map(r => (r.getLong(0), r.getLong(1))), rounds)
@@ -614,23 +680,6 @@ object GraphCheck {
     labels
   }
 
-  /** Collect a ≤`threshold`-row all-LongType relation in ONE job, or
-    * None when it is larger (or not all-long, which would change the
-    * output schema on the local paths). `df` must be materialized
-    * (localCheckpoint) so the limit probe is a cheap local scan; when
-    * the limit(threshold+1) collect comes back with ≤ threshold rows it
-    * IS the whole relation — no second job. */
-  private def collectIfSmallLongs(df: DataFrame,
-      threshold: Long): Option[Array[org.apache.spark.sql.Row]] = {
-    if (threshold <= 0) return None
-    if (!df.schema.fields.forall(_.dataType ==
-        org.apache.spark.sql.types.LongType)) return None
-    val probe = df
-      .limit(math.min(threshold + 1, Int.MaxValue.toLong).toInt)
-      .collect()
-    if (probe.length <= threshold) Some(probe) else None
-  }
-
   /** Broadcast-local twin of the [[labelPropagation]] round loop over a
     * collected SYMMETRIC distinct edge set: every node simultaneously
     * takes the most frequent neighbor label, ties to the smallest —
@@ -643,7 +692,7 @@ object GraphCheck {
       adj.keysIterator.map(n => n -> n).toMap
     for (_ <- 1 to rounds) {
       lab = adj.map { case (a, nbrs) =>
-        val cnt = scala.collection.mutable.Map.empty[Long, Long]
+        val cnt = mutable.Map.empty[Long, Long]
         nbrs.foreach { b =>
           val c = lab(b); cnt(c) = cnt.getOrElse(c, 0L) + 1
         }
@@ -733,7 +782,7 @@ object GraphCheck {
     * weight sums degenerate to the edge counts above, value-for-value
     * (oracle-re-certified after the unification). */
   def refineCommunities(edges: DataFrame, labels: DataFrame,
-      localThreshold: Long = 100000L): DataFrame =
+      localThreshold: Long = DefaultLocalThreshold): DataFrame =
     refineCommunitiesRounds(edges, labels, rounds = 1, localThreshold)
 
   /** Canonical unit-weight frame `(a, b, __ew = 1)` of a simple graph
@@ -757,18 +806,15 @@ object GraphCheck {
     * simultaneous-mover interference modularity is non-decreasing
     * round over round (spec-gated). */
   def refineCommunitiesRounds(edges: DataFrame, labels: DataFrame,
-      rounds: Int, localThreshold: Long = 100000L): DataFrame = {
+      rounds: Int,
+      localThreshold: Long = DefaultLocalThreshold): DataFrame = {
     // canonicalize ONCE; every sweep reuses the materialized frame
     // instead of re-paying the distinct() shuffle
     val und = canonUnitEdges(edges).localCheckpoint(true)
-    // Broadcast-local fast path (the connectedComponents localThreshold
-    // pattern): each distributed sweep is ~6 joins + 4 hash-aggs + a
-    // checkpoint of driver jobs for a fixture-sized graph. The local
-    // sweep is the step-for-step twin of [[refineWeightedCore]] — same
-    // exact-integer gain algebra (BigInt == the DECIMAL(38,0)
+    // driver twin: the step-for-step twin of [[refineWeightedCore]] —
+    // same exact-integer gain algebra (BigInt == the DECIMAL(38,0)
     // products), same (max gain, min community) tie order, same
-    // synchronous move gate — pinned row-identical in RoadGraphSpec.
-    // localThreshold = 0 forces the distributed loop.
+    // synchronous move gate
     localRefineInputs(und, labels, localThreshold).foreach {
       case (wedges, lab0) =>
         val spark = und.sparkSession
@@ -793,21 +839,23 @@ object GraphCheck {
     l
   }
 
-  /** Gate + one-job collect for the louvain-family local paths: the
-    * MATERIALIZED canonical weighted frame `(a, b, __ew)` and the
-    * labeling, both under `threshold` rows and all-long. */
+  /** Gate + one-job collects for the louvain-family local paths: the
+    * MATERIALIZED canonical weighted frame `(a, b, __ew)` (all-long) and
+    * the labeling, both through [[collectIfSmall]]. A labeling with a
+    * duplicate `node_id` stays distributed: its rows fan out in the
+    * distributed joins, which a driver map cannot reproduce. */
   private def localRefineInputs(undChk: DataFrame, labels: DataFrame,
       threshold: Long)
       : Option[(Array[(Long, Long, Long)], Map[Long, Long])] =
-    collectIfSmallLongs(undChk, threshold).flatMap { es =>
-      collectIfSmallLongs(
-        labels.select(col("node_id").cast("long"),
-          col("label").cast("long")).localCheckpoint(true), threshold)
-        .map { ls =>
-          (es.map(r => (r.getLong(0), r.getLong(1), r.getLong(2))),
-            ls.map(r => r.getLong(0) -> r.getLong(1)).toMap)
-        }
-    }
+    (if (allLong(undChk)) collectIfSmall(undChk, threshold) else None)
+      .flatMap { es =>
+        collectIfSmall(labels.select(col("node_id").cast("long"),
+            col("label").cast("long")).localCheckpoint(true), threshold)
+          .map(_.map(r => r.getLong(0) -> r.getLong(1)))
+          .filter(ls => ls.map(_._1).distinct.length == ls.length)
+          .map(ls => (es.map(r => (r.getLong(0), r.getLong(1), r.getLong(2))),
+            ls.toMap))
+      }
 
   /** Broadcast-local twin of ONE [[refineWeightedCore]] sweep over
     * collected canonical weighted edges (a ≤ b, parallel rows summed,
@@ -821,7 +869,6 @@ object GraphCheck {
   private def refineWeightedLocal(und: Array[(Long, Long, Long)],
       labels: Map[Long, Long],
       parity: Option[Int]): Map[Long, Long] = {
-    import scala.collection.mutable
     val deg = mutable.Map.empty[Long, Long]
     und.foreach { case (a, b, w) =>
       if (a == b) deg(a) = deg.getOrElse(a, 0L) + 2 * w
@@ -892,15 +939,12 @@ object GraphCheck {
     * hash-agg; output is |communities|²-bounded but in practice tiny
     * relative to the input — the whole point of coarsening. */
   def coarsenGraph(edges: DataFrame, labels: DataFrame,
-      localThreshold: Long = 100000L): DataFrame = {
+      localThreshold: Long = DefaultLocalThreshold): DataFrame = {
     val und = canonUnitEdges(edges).localCheckpoint(true)
-    // Broadcast-local fast path (the connectedComponents localThreshold
-    // pattern): both label-attach joins + the (cA, cB) hash-agg become
-    // one in-memory group-by over the collected canonical edge set —
-    // labeled endpoints only (the inner joins), ties oriented
-    // (min, max) exactly like the distributed agg keys. Pinned
-    // local == distributed in RoadGraphSpec; localThreshold = 0 forces
-    // the distributed form.
+    // driver twin: both label-attach joins + the (cA, cB) hash-agg
+    // become one in-memory group-by over the collected canonical edge
+    // set — labeled endpoints only (the inner joins), ties oriented
+    // (min, max) exactly like the distributed agg keys
     localRefineInputs(und, labels, localThreshold).foreach {
       case (wedges, lm) =>
         val spark = und.sparkSession
@@ -1081,17 +1125,14 @@ object GraphCheck {
     * magnitude smaller; the projection is one keyed join. */
   def louvainTwoLevel(edges: DataFrame, labels: DataFrame,
       level1Rounds: Int, level2Rounds: Int,
-      localThreshold: Long = 100000L): DataFrame = {
+      localThreshold: Long = DefaultLocalThreshold): DataFrame = {
     val und = canonUnitEdges(edges).localCheckpoint(true)
-    // Broadcast-local fast path (the connectedComponents localThreshold
-    // pattern): the whole two-level pipeline — phase-1 sweeps, coarsen,
-    // gated phase-2 sweeps, projection — runs driver-local on the
-    // collected canonical edge set. Each local step is the twin of its
+    // driver twin: the whole two-level pipeline — phase-1 sweeps,
+    // coarsen, gated phase-2 sweeps, projection — on the collected
+    // canonical edge set. Each local step is the twin of its
     // distributed counterpart ([[refineWeightedLocal]] both phases —
     // same BigInt gain algebra, same parity/down-only gating; coarsen
-    // is the same inner-label-join + (min,max) count). Pinned
-    // local == distributed in RoadGraphSpec; localThreshold = 0 forces
-    // the distributed pipeline.
+    // is the same inner-label-join + (min,max) count).
     localRefineInputs(und, labels, localThreshold).foreach {
       case (wedges, lab0) =>
         val spark = und.sparkSession
@@ -1228,7 +1269,7 @@ object GraphCheck {
     * so the per-node fold is tiny. localCheckpoint per round keeps
     * plans flat. */
   def coreness(edges: DataFrame, rounds: Int,
-      localThreshold: Long = 100000L): DataFrame = {
+      localThreshold: Long = DefaultLocalThreshold): DataFrame = {
     val sym = edges
       .select(col("start_node").as("a"), col("end_node").as("b"))
       .unionByName(
@@ -1236,16 +1277,10 @@ object GraphCheck {
       .filter(col("a") =!= col("b"))
       .distinct()
       .localCheckpoint(true)
-    // Broadcast-local fast path (the connectedComponents localThreshold
-    // pattern): `rounds` x (join + 2 hash-agg + checkpoint) driver jobs
-    // collapse to an in-memory H-index sweep over the collected
-    // symmetric edge set. The local H-index over the sorted-descending
-    // neighbor values equals the distributed histogram fold exactly
-    // (same max-over-prefixes of min(value, count) — integer algebra,
-    // no floats); pinned local == distributed in RoadGraphSpec.
-    // localThreshold = 0 forces the distributed loop (the Window-free
-    // plan audit and scale witnesses run that form).
-    collectIfSmallLongs(sym, localThreshold).foreach { rows =>
+    // driver twin: the H-index over the sorted-descending neighbor
+    // values equals the distributed histogram fold exactly (same
+    // max-over-prefixes of min(value, count) — integer algebra)
+    if (allLong(sym)) collectIfSmall(sym, localThreshold).foreach { rows =>
       val spark = sym.sparkSession
       import spark.implicits._
       return corenessLocal(rows.map(r => (r.getLong(0), r.getLong(1))),
@@ -1390,23 +1425,18 @@ object GraphCheck {
           .otherwise(lit(0.0)).as("transitivity"))
 
   def pageRank(edges: DataFrame, iters: Int = 20,
-      damping: Double = 0.85, localThreshold: Long = 100000L): DataFrame = {
+      damping: Double = 0.85,
+      localThreshold: Long = DefaultLocalThreshold): DataFrame = {
     val e = edges.select(col("start_node").as("src"),
       col("end_node").as("dst")).localCheckpoint(true)
-    // Broadcast-local fast path (same adaptive decision as
-    // [[multiSourceShortestPaths]]): a graph that fits on the driver
-    // pays `iters` join+agg job launches for nothing. The local loop is
-    // the identical synchronous update (teleport + damping * sum of
-    // inbound rank/outdeg, dangling mass leaking), so ranks agree with
-    // the distributed path to float addition order — which the
-    // consumer-side round(…, 8) absorbs. localThreshold = 0 forces the
-    // distributed loop.
-    if (localThreshold > 0 &&
-        e.limit(math.min(localThreshold + 1, Int.MaxValue.toLong).toInt)
-          .count() <= localThreshold) {
+    // driver twin: the identical synchronous update (teleport +
+    // damping * sum of inbound rank/outdeg, dangling mass leaking), so
+    // ranks agree with the distributed path to float addition order —
+    // which the consumer-side round(…, 8) absorbs
+    collectIfSmall(e, localThreshold).foreach { rows =>
       val spark = edges.sparkSession
       import spark.implicits._
-      val es = e.collect().map(r => (r.getLong(0), r.getLong(1)))
+      val es = rows.map(r => (r.getLong(0), r.getLong(1)))
       val ids = (es.map(_._1) ++ es.map(_._2)).distinct.sorted
       val idx = ids.zipWithIndex.toMap
       val n = ids.length
@@ -1459,7 +1489,7 @@ object GraphCheck {
     * the identical chain. */
   def personalizedPageRank(edges: DataFrame, seeds: Seq[Long],
       iters: Int = 20, damping: Double = 0.85,
-      localThreshold: Long = 100000L): DataFrame = {
+      localThreshold: Long = DefaultLocalThreshold): DataFrame = {
     // dedup seeds and make them part of the node universe: a repeated
     // seed must not halve its restart share, and a seed with no edges
     // must still hold its teleport mass (igraph keeps the vertex)
@@ -1469,12 +1499,10 @@ object GraphCheck {
       col("end_node").as("dst")).localCheckpoint(true)
     val seedSet = seedIds.toSet
     val tp = (1.0 - damping) / seedIds.size
-    if (localThreshold > 0 &&
-        e.limit(math.min(localThreshold + 1, Int.MaxValue.toLong).toInt)
-          .count() <= localThreshold) {
+    collectIfSmall(e, localThreshold).foreach { rows =>
       val spark = edges.sparkSession
       import spark.implicits._
-      val es = e.collect().map(r => (r.getLong(0), r.getLong(1)))
+      val es = rows.map(r => (r.getLong(0), r.getLong(1)))
       val ids = (es.map(_._1) ++ es.map(_._2) ++ seedIds).distinct.sorted
       val idx = ids.zipWithIndex.toMap
       val n = ids.length
@@ -1532,7 +1560,7 @@ object GraphCheck {
     * integer weights; the VRP/logistics input surface. */
   def costMatrix(edges: DataFrame, sources: Seq[Long],
       targets: Seq[Long], maxIter: Int = 100,
-      localThreshold: Long = 100000L): DataFrame = {
+      localThreshold: Long = DefaultLocalThreshold): DataFrame = {
     require(sources.nonEmpty, "costMatrix: sources must be non-empty")
     val eChk = materializeEdges(edges)
     sources.map { s0 =>
@@ -1556,44 +1584,23 @@ object GraphCheck {
     * is the space-syntax accessibility surface the reference's exports
     * feed (osm-pg-etl.md's igraph hand-off). */
   def closenessFromSources(edges: DataFrame, sources: Seq[Long],
-      maxIter: Int = 100, localThreshold: Long = 100000L): DataFrame = {
+      maxIter: Int = 100,
+      localThreshold: Long = DefaultLocalThreshold): DataFrame = {
     require(sources.nonEmpty, "closenessFromSources: sources must be non-empty")
     val eChk = materializeEdges(edges)
-    // Broadcast-local fast path: ONE collect of the edge relation, k
-    // driver-side Dijkstras, one result relation — instead of k
-    // independent (probe + collect + createDataFrame) round-trips plus
-    // a k-way union-aggregate. Integer-centimeter weights stay exact in
-    // doubles (< 2^53), so sums match the distributed path bit-for-bit.
-    if (localThreshold > 0 &&
-        eChk.limit(math.min(localThreshold + 1, Int.MaxValue.toLong).toInt)
-          .count() <= localThreshold) {
+    // driver twin: ONE collect of the edge relation, k driver-side
+    // Dijkstras, one result relation — instead of k independent SSSP
+    // calls plus a k-way union-aggregate. Integer-centimeter weights
+    // stay exact in doubles (< 2^53), so sums match the distributed
+    // path bit-for-bit.
+    collectWeighted(eChk, localThreshold).map(adjacency).foreach { adj =>
       val spark = edges.sparkSession
       import spark.implicits._
-      val isLong = eChk.schema("w").dataType ==
-        org.apache.spark.sql.types.LongType
-      val es = eChk.select(col("start_node"), col("end_node"),
-          col("w").cast("double")).collect()
-        .map(r => (r.getLong(0), (r.getLong(1), r.getDouble(2))))
-        .groupBy(_._1).map { case (k, v) => k -> v.map(_._2) }
-      val sumD = scala.collection.mutable.Map[Long, Double]()
-      val cnt = scala.collection.mutable.Map[Long, Long]()
+      val isLong = eChk.schema("w").dataType == LongType
+      val sumD = mutable.Map[Long, Double]()
+      val cnt = mutable.Map[Long, Long]()
       sources.foreach { s0 =>
-        val dist = scala.collection.mutable.Map[Long, Double]()
-        val pq = scala.collection.mutable.PriorityQueue
-          .empty[(Double, Long)](Ordering.by[(Double, Long), Double](_._1).reverse)
-        dist(s0) = 0.0; pq.enqueue((0.0, s0))
-        while (pq.nonEmpty) {
-          val (d, u) = pq.dequeue()
-          if (d <= dist(u)) {
-            es.getOrElse(u, Array.empty[(Long, Double)]).foreach { case (v, w) =>
-              val nd = d + w
-              if (!dist.contains(v) || nd < dist(v)) {
-                dist(v) = nd; pq.enqueue((nd, v))
-              }
-            }
-          }
-        }
-        dist.foreach { case (nd, d) =>
+        dijkstraLocal(adj, Seq(s0))._1.foreach { case (nd, d) =>
           sumD(nd) = sumD.getOrElse(nd, 0.0) + d
           cnt(nd) = cnt.getOrElse(nd, 0L) + 1L
         }
@@ -1622,7 +1629,8 @@ object GraphCheck {
     * The 1/d terms are double; consumers round for cross-engine
     * comparison (the pageRank contract). */
   def harmonicFromSources(edges: DataFrame, sources: Seq[Long],
-      maxIter: Int = 100, localThreshold: Long = 100000L): DataFrame = {
+      maxIter: Int = 100,
+      localThreshold: Long = DefaultLocalThreshold): DataFrame = {
     require(sources.nonEmpty, "harmonicFromSources: sources must be non-empty")
     val eChk = materializeEdges(edges)
     sources.map { s0 =>
@@ -1642,7 +1650,8 @@ object GraphCheck {
     * road scale, or take [[pseudoDiameter]]'s two-sweep bound).
     * Exact integer output on integer weights. */
   def eccentricityFromSources(edges: DataFrame, sources: Seq[Long],
-      maxIter: Int = 100, localThreshold: Long = 100000L): DataFrame = {
+      maxIter: Int = 100,
+      localThreshold: Long = DefaultLocalThreshold): DataFrame = {
     require(sources.nonEmpty, "eccentricityFromSources: sources must be non-empty")
     val spark = edges.sparkSession
     import spark.implicits._
@@ -1663,7 +1672,8 @@ object GraphCheck {
     * `(from_node, to_node, pseudo_diameter)`; deterministic, so an
     * independent BFS replay reproduces it. */
   def pseudoDiameter(edges: DataFrame, seed: Long,
-      maxIter: Int = 100, localThreshold: Long = 100000L): DataFrame = {
+      maxIter: Int = 100,
+      localThreshold: Long = DefaultLocalThreshold): DataFrame = {
     val hop = edges.select(col("start_node"), col("end_node"),
       lit(1L).as("w"))
     def farthest(s: Long): DataFrame =
@@ -1691,15 +1701,13 @@ object GraphCheck {
     * norms ride broadcast cross joins, localCheckpoint keeps plans
     * flat; broadcast-local fast path below the same threshold. */
   def hits(edges: DataFrame, iters: Int = 10,
-      localThreshold: Long = 100000L): DataFrame = {
+      localThreshold: Long = DefaultLocalThreshold): DataFrame = {
     val e = edges.select(col("start_node").as("src"),
       col("end_node").as("dst")).localCheckpoint(true)
-    if (localThreshold > 0 &&
-        e.limit(math.min(localThreshold + 1, Int.MaxValue.toLong).toInt)
-          .count() <= localThreshold) {
+    collectIfSmall(e, localThreshold).foreach { rows =>
       val spark = edges.sparkSession
       import spark.implicits._
-      val es = e.collect().map(r => (r.getLong(0), r.getLong(1)))
+      val es = rows.map(r => (r.getLong(0), r.getLong(1)))
       val ids = (es.map(_._1) ++ es.map(_._2)).distinct.sorted
       val idx = ids.zipWithIndex.toMap
       val n = ids.length
@@ -1774,7 +1782,7 @@ object GraphCheck {
     * Returns every graph node with its (float) centrality — consumers
     * round for cross-engine comparison. */
   def betweennessFromSources(edges: DataFrame, sources: Seq[Long],
-      maxIter: Int = 100, localThreshold: Long = 100000L,
+      maxIter: Int = 100, localThreshold: Long = DefaultLocalThreshold,
       waveSize: Int = 32): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
@@ -1790,22 +1798,15 @@ object GraphCheck {
     val allNodes = eChk.select(col("start_node").as("node_id"))
       .unionByName(eChk.select(col("end_node").as("node_id")))
       .distinct().localCheckpoint(true)
-    if (localThreshold > 0 &&
-        eChk.limit(math.min(localThreshold + 1, Int.MaxValue.toLong).toInt)
-          .count() <= localThreshold) {
-      val es = eChk.select(col("start_node"), col("end_node"),
-          col("w").cast("double")).collect()
-        .map(r => (r.getLong(0), (r.getLong(1), r.getDouble(2))))
-        .groupBy(_._1).map { case (k, v) => k -> v.map(_._2) }
-      val bc = scala.collection.mutable.Map[Long, Double]()
+    collectWeighted(eChk, localThreshold).map(adjacency).foreach { es =>
+      val bc = mutable.Map[Long, Double]()
       sources.foreach { s =>
-        val dist = scala.collection.mutable.Map[Long, Double]()
-        val sigma = scala.collection.mutable.Map[Long, Double]()
-        val preds = scala.collection.mutable.Map[Long,
-          scala.collection.mutable.ArrayBuffer[Long]]()
-        val settled = scala.collection.mutable.ArrayBuffer[Long]()
-        val done = scala.collection.mutable.Set[Long]()
-        val pq = scala.collection.mutable.PriorityQueue
+        val dist = mutable.Map[Long, Double]()
+        val sigma = mutable.Map[Long, Double]()
+        val preds = mutable.Map[Long, mutable.ArrayBuffer[Long]]()
+        val settled = mutable.ArrayBuffer[Long]()
+        val done = mutable.Set[Long]()
+        val pq = mutable.PriorityQueue
           .empty[(Double, Long)](Ordering.by[(Double, Long), Double](_._1).reverse)
         dist(s) = 0.0; sigma(s) = 1.0; pq.enqueue((0.0, s))
         while (pq.nonEmpty) {
@@ -1816,7 +1817,7 @@ object GraphCheck {
               val nd = d + w
               if (!dist.contains(v) || nd < dist(v)) {
                 dist(v) = nd; sigma(v) = sigma(u)
-                preds(v) = scala.collection.mutable.ArrayBuffer(u)
+                preds(v) = mutable.ArrayBuffer(u)
                 pq.enqueue((nd, v))
               } else if (nd == dist(v) && !done.contains(v)) {
                 sigma(v) += sigma(u); preds(v) += u
@@ -1824,7 +1825,7 @@ object GraphCheck {
             }
           }
         }
-        val delta = scala.collection.mutable.Map[Long, Double]()
+        val delta = mutable.Map[Long, Double]()
         settled.reverseIterator.foreach { wn =>
           preds.getOrElse(wn, Nil).foreach { u =>
             delta(u) = delta.getOrElse(u, 0.0) +
@@ -1978,23 +1979,20 @@ object GraphCheck {
     * -1 on the distributed delegation (no meaningful single count). */
   def aStarPathTo(edges: DataFrame, coords: DataFrame, source: Long,
       target: Long, maxIter: Int = 100,
-      localThreshold: Long = 100000L): Option[(Seq[Long], Double, Long)] = {
+      localThreshold: Long = DefaultLocalThreshold)
+      : Option[(Seq[Long], Double, Long)] = {
     val eChk = materializeEdges(edges)
-    val isLocal = localThreshold > 0 &&
-      eChk.limit(math.min(localThreshold + 1, Int.MaxValue.toLong).toInt)
-        .count() <= localThreshold
-    if (!isLocal)
-      return aStarDistributed(eChk, coords, source, target, maxIter)
+    val adj = collectWeighted(eChk, localThreshold) match {
+      case Some(es) => adjacency(es)
+      case None =>
+        return aStarDistributed(eChk, coords, source, target, maxIter)
+    }
     val nodes = eChk.select(col("start_node").as("node_id"))
       .unionByName(eChk.select(col("end_node").as("node_id"))).distinct()
     val xy = coords.select(col("node_id"), col("lon"), col("lat"))
       .join(nodes, Seq("node_id"), "left_semi")
       .collect().map(r => r.getLong(0) -> (r.getDouble(1), r.getDouble(2)))
       .toMap
-    val adj = eChk.select(col("start_node"), col("end_node"),
-        col("w").cast("double")).collect()
-      .map(r => (r.getLong(0), (r.getLong(1), r.getDouble(2))))
-      .groupBy(_._1).map { case (k, v) => k -> v.map(_._2) }
     if (!xy.contains(target)) return None
     val (tLon, tLat) = xy(target)
     // rounding slack: stored integer-cm weights can round DOWN up to
@@ -2014,10 +2012,10 @@ object GraphCheck {
       math.max(0.0,
         2.0 * 6371008.8 * math.asin(math.sqrt(a)) * 100.0 - slackCm)
     }.getOrElse(0.0) // unknown coords: h=0 stays admissible
-    val dist = scala.collection.mutable.Map(source -> 0.0)
-    val pred = scala.collection.mutable.Map(source -> source)
-    val closed = scala.collection.mutable.Set[Long]()
-    val pq = scala.collection.mutable.PriorityQueue
+    val dist = mutable.Map(source -> 0.0)
+    val pred = mutable.Map(source -> source)
+    val closed = mutable.Set[Long]()
+    val pq = mutable.PriorityQueue
       .empty[(Double, Long)](Ordering.by[(Double, Long), Double](_._1).reverse)
     pq.enqueue((hCm(source), source))
     var settled = 0L
@@ -2042,11 +2040,7 @@ object GraphCheck {
       }
     }
     if (!closed(target)) None
-    else {
-      var path = List(target); var cur = target
-      while (cur != source) { cur = pred(cur); path = cur :: path }
-      Some((path, dist(target), settled))
-    }
+    else Some((walkPath(pred, source, target), dist(target), settled))
   }
 
   /** Distributed goal-directed best-path search — the scale branch of
@@ -2173,7 +2167,7 @@ object GraphCheck {
     * independent of full-graph size. */
   def kShortestPaths(edges: DataFrame, source: Long, target: Long,
       k: Int, maxIter: Int = 100,
-      localThreshold: Long = 100000L, pruneSlack: Double = 0.5,
+      localThreshold: Long = DefaultLocalThreshold, pruneSlack: Double = 0.5,
       maxEscalations: Int = 3,
       localYen: Boolean = true): Seq[(Seq[Long], Double)] = {
     val eChk = materializeEdges(edges)
@@ -2189,12 +2183,7 @@ object GraphCheck {
     // result is bit-identical. The ellipse prune is a cost device for
     // planet graphs and is unnecessary here (both paths return the
     // exact global top-k).
-    if (localYen && localThreshold > 0 &&
-        eChk.limit(math.min(localThreshold + 1, Int.MaxValue.toLong).toInt)
-          .count() <= localThreshold) {
-      val es = eChk.select(col("start_node"), col("end_node"),
-          col("w").cast("double")).collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
+    if (localYen) collectWeighted(eChk, localThreshold).foreach { es =>
       return yenLocal(es, source, target, k)
     }
     val first = shortestPathTo(eChk, source, target, maxIter, localThreshold)
@@ -2262,29 +2251,9 @@ object GraphCheck {
     val spark = edges.sparkSession
     import spark.implicits._
     val eChk = materializeEdges(edges)
-    if (localThreshold > 0 &&
-        eChk.limit(math.min(localThreshold + 1, Int.MaxValue.toLong).toInt)
-          .count() <= localThreshold) {
-      val adj = eChk.select(col("start_node"), col("end_node"),
-          col("w").cast("double")).collect()
-        .map(r => (r.getLong(0), (r.getLong(1), r.getDouble(2))))
-        .groupBy(_._1).map { case (kk, v) => kk -> v.map(_._2) }
-      val dist = scala.collection.mutable.Map(source -> 0.0)
-      val pq = scala.collection.mutable.PriorityQueue
-        .empty[(Double, Long)](Ordering.by[(Double, Long), Double](_._1).reverse)
-      pq.enqueue((0.0, source))
-      while (pq.nonEmpty) {
-        val (d, u) = pq.dequeue()
-        if (d <= dist(u) && d <= bound) {
-          adj.getOrElse(u, Array.empty[(Long, Double)]).foreach { case (v, w) =>
-            val nd = d + w
-            if (nd <= bound && (!dist.contains(v) || nd < dist(v))) {
-              dist(v) = nd; pq.enqueue((nd, v))
-            }
-          }
-        }
-      }
-      return dist.toSeq.sortBy(_._1).toDF("node_id", "dist")
+    collectWeighted(eChk, localThreshold).map(adjacency).foreach { adj =>
+      return dijkstraLocal(adj, Seq(source), bound)._1.toSeq.sortBy(_._1)
+        .toDF("node_id", "dist")
     }
     val e = eChk.select(col("start_node").as("src"),
       col("end_node").as("dst"), col("w").cast("double").as("w"))
@@ -2324,50 +2293,27 @@ object GraphCheck {
     * the distributed loop in RoadGraphSpec. */
   private def yenLocal(es: Array[(Long, Long, Double)], source: Long,
       target: Long, k: Int): Seq[(Seq[Long], Double)] = {
-    val adj = es.map { case (a, b, w) => (a, (b, w)) }
-      .groupBy(_._1).map { case (kk, v) => kk -> v.map(_._2) }
-    // Dijkstra with excluded edges/nodes; smaller-pred tie rule
+    val adj = adjacency(es)
+    // spur Dijkstra with excluded edges/nodes
     def sp(removedEdges: Set[(Long, Long)], removedNodes: Set[Long],
-        from: Long): Option[(Seq[Long], Double)] = {
-      if (removedNodes.contains(from)) return None
-      val dist = scala.collection.mutable.Map(from -> 0.0)
-      val pred = scala.collection.mutable.Map(from -> from)
-      val pq = scala.collection.mutable.PriorityQueue
-        .empty[(Double, Long)](
-          Ordering.by[(Double, Long), Double](_._1).reverse)
-      pq.enqueue((0.0, from))
-      while (pq.nonEmpty) {
-        val (d, u) = pq.dequeue()
-        if (d <= dist(u)) {
-          adj.getOrElse(u, Array.empty[(Long, Double)]).foreach {
-            case (v, w) =>
-              if (!removedNodes.contains(v) &&
-                  !removedEdges.contains((u, v))) {
-                val nd = d + w
-                if (!dist.contains(v) || nd < dist(v)) {
-                  dist(v) = nd; pred(v) = u; pq.enqueue((nd, v))
-                } else if (nd == dist(v) && u < pred(v)) pred(v) = u
-              }
-          }
-        }
+        from: Long): Option[(Seq[Long], Double)] =
+      if (removedNodes.contains(from)) None
+      else {
+        val (dist, pred) = dijkstraLocal(adj, Seq(from),
+          skip = (u, v) => removedNodes.contains(v) ||
+            removedEdges.contains((u, v)))
+        dist.get(target).map(total => (walkPath(pred, from, target), total))
       }
-      dist.get(target).map { total =>
-        var path = List(target); var cur = target
-        while (cur != from) { cur = pred(cur); path = cur :: path }
-        (path, total)
-      }
-    }
     val first = sp(Set.empty, Set.empty, source)
     if (first.isEmpty || k <= 0) return Seq.empty
     if (k == 1) return Seq(first.get)
     // per-pair min weights (pairWeights' local twin)
     val minW = es.groupBy(e => (e._1, e._2))
       .map { case (kk, v) => kk -> v.map(_._3).min }
-    val accepted = scala.collection.mutable.ArrayBuffer(first.get)
+    val accepted = mutable.ArrayBuffer(first.get)
     implicit val candOrd: Ordering[(Double, Seq[Long])] =
       Ordering.by { case (c, p) => (c, p.mkString(",")) }
-    val candidates =
-      scala.collection.mutable.SortedSet.empty[(Double, Seq[Long])]
+    val candidates = mutable.SortedSet.empty[(Double, Seq[Long])]
     while (accepted.size < k) {
       val prev = accepted.last._1
       val prefixCost = prev.zip(prev.tail)
@@ -2414,10 +2360,10 @@ object GraphCheck {
         .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2))
         .toMap
     }
-    val accepted = scala.collection.mutable.ArrayBuffer(first.get)
+    val accepted = mutable.ArrayBuffer(first.get)
     implicit val candOrd: Ordering[(Double, Seq[Long])] =
       Ordering.by { case (c, p) => (c, p.mkString(",")) }
-    val candidates = scala.collection.mutable.SortedSet.empty[(Double, Seq[Long])]
+    val candidates = mutable.SortedSet.empty[(Double, Seq[Long])]
     while (accepted.size < k) {
       val prev = accepted.last._1
       val w = pairWeights(prev)
@@ -2486,21 +2432,17 @@ object GraphCheck {
     * Isolated nodes (no edges) are not in the node universe, matching
     * the edge-list domain. */
   def stronglyConnectedComponents(edges: DataFrame,
-      maxIter: Int = 50, localThreshold: Long = 100000L): DataFrame = {
-    // Broadcast-local fast path: the peel loop costs O(peels × rounds)
-    // job launches, pure overhead on a driver-sized graph. Iterative
-    // Tarjan gives the exact same relation — labels are defined as the
-    // max node id of each SCC in BOTH paths, so results are
-    // bit-identical, not merely equivalent. localThreshold = 0 forces
-    // the distributed peel loop (what ScaleSmoke witnesses).
+      maxIter: Int = 50,
+      localThreshold: Long = DefaultLocalThreshold): DataFrame = {
+    // driver twin: iterative Tarjan gives the exact same relation —
+    // labels are defined as the max node id of each SCC in BOTH paths,
+    // so results are bit-identical, not merely equivalent
     val e0 = edges.select(col("start_node").as("src"), col("end_node").as("dst"))
       .distinct().localCheckpoint(true)
-    if (localThreshold > 0 &&
-        e0.limit(math.min(localThreshold + 1, Int.MaxValue.toLong).toInt)
-          .count() <= localThreshold) {
+    collectIfSmall(e0, localThreshold).foreach { rows =>
       val spark = edges.sparkSession
       import spark.implicits._
-      val es = e0.collect().map(r => (r.getLong(0), r.getLong(1)))
+      val es = rows.map(r => (r.getLong(0), r.getLong(1)))
       val ids = (es.map(_._1) ++ es.map(_._2)).distinct.sorted
       val idx = ids.zipWithIndex.toMap
       val n = ids.length
@@ -2510,12 +2452,12 @@ object GraphCheck {
       val low = new Array[Int](n)
       val onStack = new Array[Boolean](n)
       val comp = Array.fill(n)(-1)
-      val sccStack = scala.collection.mutable.ArrayBuffer[Int]()
+      val sccStack = mutable.ArrayBuffer[Int]()
       var counter = 0
       var nComp = 0
       for (root <- 0 until n if index(root) == -1) {
         // explicit call stack: (vertex, remaining-children iterator)
-        val call = scala.collection.mutable.Stack[(Int, Iterator[Int])]()
+        val call = mutable.Stack[(Int, Iterator[Int])]()
         index(root) = counter; low(root) = counter; counter += 1
         sccStack += root; onStack(root) = true
         call.push((root, adj(root).iterator))
@@ -2648,41 +2590,17 @@ object GraphCheck {
     * Returns (path nodes source..target, total distance), or None if
     * unreachable. */
   def shortestPathTo(edges: DataFrame, source: Long, target: Long,
-      maxIter: Int = 100, localThreshold: Long = 100000L): Option[(Seq[Long], Double)] = {
+      maxIter: Int = 100, localThreshold: Long = DefaultLocalThreshold)
+      : Option[(Seq[Long], Double)] = {
     val spark = edges.sparkSession
     import spark.implicits._
-    // broadcast-local fast path (see multiSourceShortestPaths); the
-    // equal-distance tie keeps the SMALLER predecessor, matching the
+    // driver twin: the kernel's smaller-predecessor tie rule matches the
     // distributed min(struct(dist, pred)) exactly
     val eChk = materializeEdges(edges)
-    if (localThreshold > 0 &&
-        eChk.limit(math.min(localThreshold + 1, Int.MaxValue.toLong).toInt)
-          .count() <= localThreshold) {
-      val adj = eChk.select(col("start_node"), col("end_node"),
-          col("w").cast("double")).collect()
-        .map(r => (r.getLong(0), (r.getLong(1), r.getDouble(2))))
-        .groupBy(_._1).map { case (k, v) => k -> v.map(_._2) }
-      val dist = scala.collection.mutable.Map(source -> 0.0)
-      val pred = scala.collection.mutable.Map(source -> source)
-      val pq = scala.collection.mutable.PriorityQueue
-        .empty[(Double, Long)](Ordering.by[(Double, Long), Double](_._1).reverse)
-      pq.enqueue((0.0, source))
-      while (pq.nonEmpty) {
-        val (d, u) = pq.dequeue()
-        if (d <= dist(u)) {
-          adj.getOrElse(u, Array.empty[(Long, Double)]).foreach { case (v, w) =>
-            val nd = d + w
-            if (!dist.contains(v) || nd < dist(v)) {
-              dist(v) = nd; pred(v) = u; pq.enqueue((nd, v))
-            } else if (nd == dist(v) && u < pred(v)) pred(v) = u
-          }
-        }
-      }
-      return dist.get(target).map { total =>
-        var path = List(target); var cur = target
-        while (cur != source) { cur = pred(cur); path = cur :: path }
-        (path, total)
-      }
+    collectWeighted(eChk, localThreshold).map(adjacency).foreach { adj =>
+      val (dist, pred) = dijkstraLocal(adj, Seq(source))
+      return dist.get(target)
+        .map(total => (walkPath(pred, source, target), total))
     }
     val e = eChk.select(col("start_node").as("src"),
       col("end_node").as("dst"), col("w").cast("double").as("w"))
@@ -2748,7 +2666,7 @@ object GraphCheck {
       .select(col("node_id"), col("pred").as("anc"))
       .localCheckpoint(true)
     // driver state is path-sized: node -> offset (hops before target)
-    val marked = scala.collection.mutable.Map(target -> 0L)
+    val marked = mutable.Map(target -> 0L)
     var reach = 1L
     var rounds = 0
     val maxRounds = 64 - java.lang.Long.numberOfLeadingZeros(
@@ -2800,7 +2718,7 @@ object GraphCheck {
     * `edges` must carry `(start_node, end_node, edge_id, w)`. */
   def drivingDistanceRows(edges: DataFrame, sources: Seq[Long],
       cutoff: Double, maxIter: Int = 100,
-      localThreshold: Long = 100000L): DataFrame = {
+      localThreshold: Long = DefaultLocalThreshold): DataFrame = {
     val eChk = edges
       .select(col("start_node"), col("end_node"), col("edge_id"), col("w"))
       .localCheckpoint(true)

@@ -301,6 +301,10 @@ class PropertySpec extends SparkTestBase {
 
   test("SSSP (both paths) == Floyd-Warshall on random weighted digraphs") {
     import graft.osm.GraphCheck
+    // the path/closeness/KSP draws use their own generator so the shared
+    // `rnd` sequence, and with it every later test's input, is unchanged
+    val pick = new scala.util.Random(99L)
+    var kspAlternatives = 0
     (1 to 5).foreach { _ =>
       val n = 6 + rnd.nextInt(10)
       val edges = (for {
@@ -326,8 +330,45 @@ class PropertySpec extends SparkTestBase {
             .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
           assert(got === want, s"n=$n src=$src thr=$thr")
         }
+        // shortestPathTo: FW total, a path that realizes it, and the
+        // same node sequence from the driver kernel and the loop
+        val weight = edges.map { case (a, b, w) => (a, b) -> w }.toMap
+        val dst = pick.nextInt(n).toLong
+        val local = GraphCheck.shortestPathTo(df, src, dst)
+        assert(local.map(_._2.toLong) === want.get(dst), s"n=$n $src->$dst")
+        local.foreach { case (path, total) =>
+          assert(path.head === src && path.last === dst)
+          assert(path.zip(path.tail).map(weight).sum === total.toLong,
+            s"path $path does not sum to $total")
+        }
+        assert(GraphCheck.shortestPathTo(df, src, dst, localThreshold = 0L)
+          === local, s"n=$n $src->$dst local path != distributed")
+        // hop metric: equal-length alternatives are common, so the
+        // smaller-predecessor tie rule decides the node sequence
+        val hops = edges.map { case (a, b, _) => (a, b, 1L) }
+          .toDF("start_node", "end_node", "w")
+        assert(GraphCheck.shortestPathTo(hops, src, dst) ===
+          GraphCheck.shortestPathTo(hops, src, dst, localThreshold = 0L),
+          s"n=$n $src->$dst hop path: local != distributed")
+        // closeness over two sources: driver kernel == distributed SSSPs
+        val srcs = Seq(src, pick.nextInt(n).toLong).distinct
+        def closeness(thr: Long) = GraphCheck.closenessFromSources(df, srcs,
+            localThreshold = thr)
+          .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
+          .sorted.toSeq
+        assert(closeness(100000L) === closeness(0L), s"n=$n srcs=$srcs")
+        // k shortest paths: in-memory Yen == the DataFrame loop, on
+        // distinct power-of-two weights so no two distinct paths tie
+        val kEdges = edges.take(50).zipWithIndex
+          .map { case ((a, b, _), i) => (a, b, 1L << i) }
+          .toDF("start_node", "end_node", "w")
+        val ksp = GraphCheck.kShortestPaths(kEdges, src, dst, k = 3)
+        assert(ksp === GraphCheck.kShortestPaths(kEdges, src, dst, k = 3,
+          localYen = false), s"n=$n ksp $src->$dst")
+        if (ksp.size > 1) kspAlternatives += 1
       }
     }
+    assert(kspAlternatives > 0, "no trial ranked an alternative path")
   }
 
   test("simplifyLine is idempotent; closestPoint distance respects it") {

@@ -903,6 +903,29 @@ class RoadGraphSpec extends SparkTestBase {
     assert(rows2(GraphCheck.coreness(edges, rounds = 8)) ===
       rows2(GraphCheck.coreness(edges, rounds = 8, localThreshold = 0L)),
       "coreness local != distributed")
+    // dirty inputs below the gate: the default call must give the
+    // distributed rows, never a driver-side null read or a silently
+    // collapsed duplicate (nulls compare as strings)
+    def rowsAny(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(_.toSeq.map(String.valueOf).mkString(",")).sorted.toSeq
+    val nullEnd = Seq[(Long, Option[Long], Long)]((1L, Some(2L), 3L),
+      (2L, Some(3L), 4L), (3L, None, 1L), (5L, Some(6L), 2L),
+      (2L, Some(1L), 5L)).toDF("start_node", "end_node", "w")
+    assert(rowsAny(GraphCheck.connectedComponents(nullEnd)) ===
+      rowsAny(GraphCheck.connectedComponents(nullEnd, localThreshold = 0L)),
+      "components with a null end_node: default != distributed")
+    assert(rowsAny(GraphCheck.multiSourceShortestPaths(nullEnd,
+        Seq(1L, 5L))._1) ===
+      rowsAny(GraphCheck.multiSourceShortestPaths(nullEnd, Seq(1L, 5L),
+        localThreshold = 0L)._1),
+      "sssp with a null end_node: default != distributed")
+    // node 3's label row twice: the distributed joins fan it out
+    val dupLabels = labels.unionByName(labels.filter(col("node_id") === 3L))
+    assert(rowsAny(GraphCheck.refineCommunitiesRounds(edges, dupLabels,
+        rounds = 3)) ===
+      rowsAny(GraphCheck.refineCommunitiesRounds(edges, dupLabels,
+        rounds = 3, localThreshold = 0L)),
+      "refine with a duplicated label row: default != distributed")
   }
 
   test("turn restrictions: extractor drops decoys/malformed; no_ and only_ reroute the diamond") {
